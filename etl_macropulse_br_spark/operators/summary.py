@@ -16,17 +16,6 @@ from etl_macropulse_br_spark.functions.exprs import month_trunc, stable_mean
 DEFAULT_TARGET_SERIES = "selic_sgs_11"  # summary.py:12
 
 
-def latest_observation(bcb_silver: DataFrame, series_name: str) -> DataFrame:
-    """Latest row of one series (``summary.py:15-21``): case-insensitive
-    name match, then global last-by-date. ``orderBy().limit(1)`` plans
-    TakeOrderedAndProject — a true distributed top-1, no full sort."""
-    return (
-        bcb_silver.filter(F.lower(F.col("series_name").cast("string")) == series_name.lower())
-        .orderBy(F.col("date").desc())
-        .limit(1)
-    )
-
-
 def last_per_month(bcb_silver: DataFrame, series_name: str) -> DataFrame:
     """Last observation of each month for one series
     (``summary.py:31-38``: sort + groupby(month).tail(1) →
@@ -91,8 +80,10 @@ def build_summary_text(
     lines: list[str] = []
 
     # ---- BCB/SGS: latest value + MoM (summary.py:10-47) ----
+    # ONE collect: the latest month's last row IS the latest
+    # observation, and its lag over months is the MoM delta
     latest = (
-        latest_observation(bcb_silver, target_series).collect()
+        mom_delta_last_two(last_per_month(bcb_silver, target_series)).collect()
         if bcb_silver is not None
         else []
     )
@@ -107,12 +98,10 @@ def build_summary_text(
             f"BCB/SGS (série {int(row['series_id'])}) - {row['series_name']}: "
             f"último valor em {_as_date(row['date'])} = {val:.2f}."
         )
-        monthly = last_per_month(bcb_silver, target_series)
-        delta_rows = mom_delta_last_two(monthly).collect()
-        if delta_rows and delta_rows[0]["mom_change"] is not None:
+        if row["mom_change"] is not None:
             lines.append(
                 f"Variação vs mês anterior: "
-                f"{delta_rows[0]['mom_change']:+.2f} (variação absoluta)."
+                f"{row['mom_change']:+.2f} (variação absoluta)."
             )
     elif bcb_silver is not None and bcb_silver.take(1):
         lines.append(
@@ -122,7 +111,10 @@ def build_summary_text(
         lines.append("BCB/SGS - sem dados para o período.")
 
     # ---- ANP: top MoM increases by UF/product (summary.py:51-88) ----
-    if anp_silver is not None and anp_silver.take(1):
+    # the emptiness probes run only when there are no movers to show
+    if anp_silver is None:
+        lines.append("ANP - sem dados para o período.")
+    else:
         valid = anp_silver.filter(F.col("date_ref").isNotNull())
         anp_monthly = (
             valid.withColumn("month", month_trunc("date_ref"))
@@ -143,10 +135,10 @@ def build_summary_text(
             lines.append(
                 "ANP - Sem variação mensal suficiente para destacar no período."
             )
-        else:
+        elif anp_silver.take(1):
             lines.append("ANP - Sem dados válidos para o período.")
-    else:
-        lines.append("ANP - sem dados para o período.")
+        else:
+            lines.append("ANP - sem dados para o período.")
 
     text = "\n".join(lines).strip()
     return (

@@ -8,9 +8,12 @@ Spark-first rewrites of ``extract.py:91-93`` (bronze snapshots),
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def save_bronze(df: DataFrame, out_path: str) -> None:
@@ -45,13 +48,20 @@ def load_table_replace(
     DuckDB; the Spark-native equivalent is an overwrite
     ``saveAsTable`` into the session catalog (or a temp view when no
     warehouse is configured). MERGE-by-keys remains the incremental
-    path (``load.py:23`` TODO) — see plans/incremental.py.
+    path (``load.py:23`` TODO) — see plans/incremental.py. The
+    fallback is loud: a warning names the table and the exception.
     """
-    df.createOrReplaceTempView(f"{table}__staging")
     try:
         df.write.mode("overwrite").saveAsTable(table)
-    except Exception:
+    except Exception as exc:  # noqa: BLE001 — fall back, but say so
         # No writable warehouse (e.g. read-only FS): expose via view.
+        log.warning(
+            "load_table_replace: saveAsTable(%r) failed, registering a "
+            "temp view instead — %s: %s",
+            table,
+            type(exc).__name__,
+            exc,
+        )
         df.createOrReplaceTempView(table)
 
 

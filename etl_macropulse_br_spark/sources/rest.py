@@ -2,9 +2,20 @@
 
 Spark-first rewrites of ``extract.py:15-68``. HTTP happens on the
 driver (the payloads are control-plane sized: one series ≈ hundreds
-of rows, the UF dim is 27 rows); rows land in executors via
-``spark.createDataFrame`` with explicit schemas. The fetch function
-is injectable so tests run fully offline (SURVEY §7.1 step 4).
+of rows, the UF dim is 27 rows). The fetch function is injectable
+so tests run fully offline (SURVEY §7.1 step 4).
+
+Every driver-side frame here is built from a ``pyarrow.Table``
+(:func:`_local_frame`) with an explicit schema, so it plans a JVM
+``LocalTableScan``. ``createDataFrame(list)`` and
+``spark.read.json(sc.parallelize(...))`` plan a Python-RDD scan
+instead: every action over them forks a ``pyspark.daemon`` and
+Python workers and pays a Python round-trip (PLANS.md
+``range_join_buckets`` measured ~0.3 s per action). With Arrow local
+relations a full pipeline run starts no Python worker at all. The
+IBGE payload is parsed by Spark's own JVM JSON reader over a
+one-column local relation of the ``json.dumps`` strings, so schema
+inference, dtypes and null handling stay exactly Spark's.
 
 ``extract_bcb_many`` (r14 — VERDICT r13 What's missing #1 / Next
 round #1) fetches its series CONCURRENTLY on the driver: the calls
@@ -13,8 +24,8 @@ are network-bound (the reference budgets 30 s per request,
 into ~one round-trip of wall time, with per-series error isolation
 (every fetch settles before failures are reported, so one bad
 series can neither kill in-flight siblings nor hide a second
-failure). The fetched rows land in ONE ``createDataFrame`` — no
-union at all, where the r9-r13 shape built a left-deep
+failure). The fetched rows land in ONE local frame — no union at
+all, where the r9-r13 shape built a left-deep
 ``reduce(unionByName)`` tree that is analyzer-hostile at thousands
 of series. Payloads stay control-plane sized (one series ≈ hundreds
 of rows); for an O(10^4+)-series ingest whose rows no longer fit on
@@ -22,7 +33,8 @@ the driver (or whose bandwidth outgrows one NIC),
 ``extract_bcb_many_distributed`` moves the fetch into
 ``mapInPandas`` over the series control frame — executor-side
 fan-out, Arrow batches straight from the fetching task, pinned
-row-equal to the driver path.
+row-equal to the driver path. That path needs Python workers by
+design.
 """
 
 from __future__ import annotations
@@ -36,6 +48,7 @@ from urllib.request import urlopen
 
 log = logging.getLogger(__name__)
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -87,6 +100,18 @@ def _default_fetch(url: str) -> list[dict]:
         return json.loads(resp.read().decode("utf-8"))
 
 
+def _local_frame(
+    spark: SparkSession, schema: T.StructType, rows: list[tuple]
+) -> DataFrame:
+    """Driver rows → a ``LocalTableScan`` frame via one Arrow table
+    (no Python-RDD scan, so no Python worker ever runs for it)."""
+    columns = list(zip(*rows)) if rows else [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c) for c in columns], names=schema.names
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def _ddmmyyyy(iso_date: str) -> str:
     """ISO → dd/mm/YYYY request param (``extract.py:23-24``)."""
     return datetime.fromisoformat(iso_date).strftime("%d/%m/%Y")
@@ -112,10 +137,11 @@ def extract_bcb_sgs_series(
     )
     records = fetch(url)
     if not records:
-        return spark.createDataFrame([], BCB_SILVER_SCHEMA)
-    raw = spark.createDataFrame(
-        [(str(r.get("data", "")), str(r.get("valor", ""))) for r in records],
+        return _local_frame(spark, BCB_SILVER_SCHEMA, [])
+    raw = _local_frame(
+        spark,
         BCB_RAW_SCHEMA,
+        [(str(r.get("data", "")), str(r.get("valor", ""))) for r in records],
     )
     return raw.select(
         F.lit(series_id).cast("long").alias("series_id"),
@@ -132,14 +158,28 @@ def extract_ibge_uf_dim(
 
     The reference flattens nested JSON with ``pd.json_normalize``;
     Spark reads the nested struct natively and projects
-    ``regiao.nome`` directly.
+    ``regiao.nome`` directly. The JSON strings reach the JVM reader
+    (``DataFrameReader.json(Dataset[String])``) as a local relation,
+    so parsing never leaves the JVM.
     """
     fetch = fetch or _default_fetch
     records = fetch(IBGE_URL)
     if not records:
-        return spark.createDataFrame([], UF_DIM_SCHEMA)
-    raw = spark.read.json(
-        spark.sparkContext.parallelize([json.dumps(r) for r in records], 1)
+        return _local_frame(spark, UF_DIM_SCHEMA, [])
+    lines = _local_frame(
+        spark,
+        T.StructType([T.StructField("value", T.StringType())]),
+        [(json.dumps(r),) for r in records],
+    ).coalesce(1)  # one partition, so one file per sink of the dim
+    # PySpark's json() takes paths or an RDD only; the Dataset[String]
+    # overload is reached through the reader's JVM handle
+    reader = spark.read
+    raw = reader._df(
+        reader._jreader.json(
+            getattr(lines._jdf, "as")(
+                spark._jvm.org.apache.spark.sql.Encoders.STRING()
+            )
+        )
     )
     return raw.select(
         F.col("id").cast("long").alias("uf_id"),
@@ -199,7 +239,7 @@ def extract_bcb_many(
       ``on_error="skip"`` logs a warning per failure and returns the
       successful series only (the operational cron shape: one
       upstream outage must not zero the whole day's ingest).
-    - The typed output is built from ONE ``createDataFrame`` over
+    - The typed output is built from ONE Arrow local frame over
       all fetched rows + one projection — no per-series frames, no
       left-deep ``unionByName`` tree (analyzer-hostile at thousands
       of series). Row order = series order then record order, the
@@ -227,11 +267,12 @@ def extract_bcb_many(
     # loosely-typed control tables (r14 self-review)
     series = [(int(sid), str(name)) for sid, name in series]
     if not series:
-        return spark.createDataFrame(
-            [],
+        return _local_frame(
+            spark,
             BCB_SILVER_STATUS_SCHEMA
             if on_error == "status"
             else BCB_SILVER_SCHEMA,
+            [],
         )
 
     def one(sid_name: tuple[int, str]) -> list[dict]:
@@ -306,7 +347,7 @@ def extract_bcb_many(
                 ]
             )
         ]
-        raw = spark.createDataFrame(rows, BCB_MANY_STATUS_SCHEMA)
+        raw = _local_frame(spark, BCB_MANY_STATUS_SCHEMA, rows)
         return raw.select(
             "series_id",
             "series_name",
@@ -326,7 +367,7 @@ def extract_bcb_many(
         if recs is not None
         for r in recs
     ]
-    raw = spark.createDataFrame(rows, BCB_MANY_RAW_SCHEMA)
+    raw = _local_frame(spark, BCB_MANY_RAW_SCHEMA, rows)
     return raw.select(
         "series_id",
         "series_name",

@@ -775,3 +775,171 @@ def test_extract_bcb_many_normalizes_series_like_reference(spark):
         spark, series, "2025-12-01", "2026-01-31", fetch=fetch_d
     ).collect()
     assert d_rows == rows
+
+
+# ---------------------------------------------------------------
+# driver-side REST frames are Arrow local relations: no Python worker
+
+
+def test_rest_frames_plan_no_python_rdd(spark):
+    """Every frame the driver-side extracts build scans a JVM local
+    relation: a Python-RDD scan would fork Python workers on each
+    action of the pipeline."""
+    from etl_macropulse_br_spark.sources.rest import (
+        extract_bcb_many,
+        extract_bcb_sgs_series,
+        extract_ibge_uf_dim,
+    )
+
+    series = [(11, "ok"), (666, "bad")]
+
+    def flaky(url):
+        sid = _sid_from_url(url)
+        if sid == 666:
+            raise ConnectionError("boom")
+        return _sid_payload(sid)
+
+    window = ("2025-12-01", "2026-01-31")
+    frames = {
+        "many_raise": extract_bcb_many(
+            spark, series[:1], *window, fetch=flaky
+        ),
+        "many_skip": extract_bcb_many(
+            spark, series, *window, fetch=flaky, on_error="skip"
+        ),
+        "many_status": extract_bcb_many(
+            spark, series, *window, fetch=flaky, on_error="status"
+        ),
+        "many_empty": extract_bcb_many(spark, [], *window),
+        "many_empty_status": extract_bcb_many(
+            spark, [], *window, on_error="status"
+        ),
+        "sgs": extract_bcb_sgs_series(
+            spark, 11, "ok", *window, fetch=flaky
+        ),
+        "sgs_empty": extract_bcb_sgs_series(
+            spark, 11, "ok", *window, fetch=lambda url: []
+        ),
+        "ibge": extract_ibge_uf_dim(
+            spark, fetch=lambda url: IBGE_PAYLOAD
+        ),
+        "ibge_empty": extract_ibge_uf_dim(spark, fetch=lambda url: []),
+    }
+    python_scans = [
+        name
+        for name, df in frames.items()
+        if "PythonRDD"
+        in df._jdf.queryExecution().toRdd().toDebugString()
+    ]
+    assert python_scans == []
+    assert frames["many_status"].count() == 3
+    assert frames["ibge"].count() == 2
+
+
+_SP = IBGE_PAYLOAD[0]
+
+
+@pytest.mark.parametrize(
+    "payload, expected",
+    [
+        pytest.param(
+            [_SP, {"id": 13, "sigla": "AM", "nome": "Amazonas"}],
+            [(35, "SP", "São Paulo", "Sudeste"), (13, "AM", "Amazonas", None)],
+            id="regiao_missing",
+        ),
+        pytest.param(
+            [_SP, {"id": 13, "sigla": "AM", "nome": "Amazonas",
+                   "regiao": None}],
+            [(35, "SP", "São Paulo", "Sudeste"), (13, "AM", "Amazonas", None)],
+            id="regiao_null",
+        ),
+        pytest.param(
+            [_SP, {"id": "13", "sigla": "AM", "nome": "Amazonas",
+                   "regiao": {"nome": "Norte"}}],
+            [(35, "SP", "São Paulo", "Sudeste"),
+             (13, "AM", "Amazonas", "Norte")],
+            id="id_string",
+        ),
+        pytest.param(
+            [_SP, {"id": "x13", "sigla": "AM", "nome": "Amazonas",
+                   "regiao": {"nome": "Norte"}}],
+            [(35, "SP", "São Paulo", "Sudeste"),
+             (None, "AM", "Amazonas", "Norte")],
+            id="id_string_unparseable",
+        ),
+        pytest.param(
+            [dict(_SP, extra=[1, 2], meta={"a": 1}),
+             {"id": 13, "sigla": 7, "nome": "Amazonas", "z": None,
+              "regiao": {"id": 1, "nome": "Norte", "x": True}}],
+            [(35, "SP", "São Paulo", "Sudeste"),
+             (13, "7", "Amazonas", "Norte")],
+            id="extra_keys_and_int_sigla",
+        ),
+    ],
+)
+def test_extract_ibge_uf_dim_adversarial_payloads(spark, payload, expected):
+    """Spark's JSON inference types loosely shaped IBGE payloads:
+    the rows pinned here are the ones the Python-RDD JSON read
+    produced, so the JVM reader must match them exactly."""
+    from etl_macropulse_br_spark.sources.rest import (
+        UF_DIM_SCHEMA,
+        extract_ibge_uf_dim,
+    )
+
+    df = extract_ibge_uf_dim(spark, fetch=lambda url: payload)
+    assert df.schema == UF_DIM_SCHEMA
+    assert [tuple(r) for r in df.collect()] == expected
+
+
+@pytest.mark.parametrize(
+    "payload",
+    [
+        pytest.param([{"id": 13, "sigla": "AM", "nome": "Amazonas"}],
+                     id="regiao_missing_everywhere"),
+        pytest.param([{"id": 13, "sigla": "AM", "nome": "Amazonas",
+                       "regiao": None}], id="regiao_null_everywhere"),
+        pytest.param([_SP, {"id": 13, "sigla": "AM", "nome": "Amazonas",
+                            "regiao": "Norte"}], id="regiao_string"),
+    ],
+)
+def test_extract_ibge_uf_dim_without_regiao_struct_is_loud(spark, payload):
+    """No inferable ``regiao`` struct: the projection fails at
+    analysis, naming the column, instead of inventing a region."""
+    from pyspark.errors import AnalysisException
+
+    from etl_macropulse_br_spark.sources.rest import extract_ibge_uf_dim
+
+    with pytest.raises(AnalysisException, match="regiao"):
+        extract_ibge_uf_dim(spark, fetch=lambda url: payload)
+
+
+def test_load_table_replace_fallback_is_loud(spark, monkeypatch, caplog):
+    """A failed ``saveAsTable`` still registers the table as a temp
+    view, and a warning names the table and the exception."""
+    import logging
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from etl_macropulse_br_spark.sinks.writers import load_table_replace
+
+    def read_only(self, name, *args, **kwargs):
+        raise OSError(f"read-only warehouse for {name}")
+
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", read_only)
+    table = "fallback_probe_tbl"
+    try:
+        with caplog.at_level(logging.WARNING):
+            load_table_replace(spark, spark.range(3), table)
+        assert spark.table(table).count() == 3
+        assert not spark.catalog.tableExists(f"{table}__staging")
+    finally:
+        spark.catalog.dropTempView(table)
+    warn = [
+        r.getMessage()
+        for r in caplog.records
+        if r.levelno == logging.WARNING
+    ]
+    assert any(
+        table in m and "OSError" in m and "read-only warehouse" in m
+        for m in warn
+    ), warn

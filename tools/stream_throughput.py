@@ -40,6 +40,8 @@ sys.path.insert(
 
 from pyspark.sql import functions as F  # noqa: E402
 
+RECENT_PROGRESS_CONF = "spark.sql.streaming.numRecentProgressUpdates"
+
 
 def _events(spark, sf_dir, k, dest, n_files):
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -66,7 +68,7 @@ def _docs(spark, sf_dir, k, dest, n_files):
     d.orderBy("ts").coalesce(n_files).write.mode("overwrite").parquet(dest)
 
 
-def _run_stream(spark, build_query, src, ckpt, fpt):
+def _run_stream(spark, build_query, src, ckpt):
     # NOTE: maxFilesPerTrigger is a file-SOURCE option; the builders
     # set it on readStream (a first draft set it on the sink, where
     # it is silently ignored — the run consumed everything in ONE
@@ -83,8 +85,17 @@ def _run_stream(spark, build_query, src, ckpt, fpt):
     )
     q.awaitTermination(1800)
     wall = time.perf_counter() - t0
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"]])
-    rows = sum(p["numInputRows"] for p in q.recentProgress)
+    progress = q.recentProgress
+    # the query keeps only the last numRecentProgressUpdates records;
+    # a full buffer means older batches fell out and would undercount
+    kept = int(spark.conf.get(RECENT_PROGRESS_CONF))
+    if len(progress) >= kept:
+        raise RuntimeError(
+            f"stream_throughput: {len(progress)} progress records reached "
+            f"{RECENT_PROGRESS_CONF}={kept}; raise it to count every batch"
+        )
+    n_batches = len([p for p in progress if p["numInputRows"]])
+    rows = sum(p["numInputRows"] for p in progress)
     return wall, rows, n_batches
 
 
@@ -105,7 +116,12 @@ def main() -> None:
         sessionize_stream,
     )
 
-    spark = get_spark(app_name="stream_throughput", profile="cluster")
+    spark = get_spark(
+        app_name="stream_throughput",
+        profile="cluster",
+        # keep every micro-batch's progress, not the default last 100
+        extra_conf={RECENT_PROGRESS_CONF: "100000"},
+    )
     root = tempfile.mkdtemp(prefix="stream_tp_")
     out = {
         "k": args.k,
@@ -143,7 +159,6 @@ def main() -> None:
             build_sessions,
             ev_dir,
             os.path.join(root, "ckpt_sessions"),
-            args.files_per_trigger,
         )
         out["operators"]["sessionize_stream"] = {
             "input_rows": rows,
@@ -176,7 +191,6 @@ def main() -> None:
             build_dedup,
             docs_dir,
             os.path.join(root, "ckpt_dedup"),
-            args.files_per_trigger,
         )
         out["operators"]["text_dedup_stream"] = {
             "input_rows": rows,
