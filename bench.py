@@ -132,36 +132,17 @@ def weak_query_names(
     )
 
 
-def _spark_phase(
-    sf_dir: str,
-    n_runs: int,
-    group_prefix: str,
-    companion: bool,
-) -> dict:
-    """One full Spark measurement pass: fresh session, full warmup,
-    per-query warm min-of-``n_runs``. Returns timings plus (pass 1
-    only) job counts, the with-plan-build companion, and the null-job
-    floor. Two passes exist because the box's background noise drifts
-    in multi-minute bursts (see PLANS.md "Run-to-run noise floor"):
-    a burst overlapping one pass inflates every query in it, and the
-    per-query min across two passes separated by the DuckDB phase
-    discards it — the same estimator min-of-N applies within a pass.
-    """
-    from etl_macropulse_br_spark.operators.util import (
-        persisted_count,
-        unpersist_candidates,
-    )
-    from etl_macropulse_br_spark.plans.queries import QUERIES
-    from etl_macropulse_br_spark.session import get_spark
+def warm_up(spark, sf_dir: str) -> None:
+    """Untimed warm-up before any timed query: JVM, codegen, parquet
+    reader init, the Python worker, a touch of every input table and
+    each common physical shape. ``tools/ab_query.py`` and
+    ``tools/scale_probe.py`` call it too, so their numbers compare
+    with a bench row."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
-    # The bench inputs are a few MB of parquet: run under the
-    # small-input profile (static partitioning, AQE off). The cluster
-    # profile's AQE barriers cost more than these stages run; at real
-    # scale the default profile applies. See session.get_spark.
-    spark = get_spark(app_name="bench", profile="small-input")
+    from etl_macropulse_br_spark.sources.files import TESTDATA_TABLES
 
-    # warmup: JVM, codegen, parquet reader init, Python UDF workers
-    # (untimed)
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     def _noop(batches):
@@ -179,29 +160,21 @@ def _spark_phase(
     # early-position LSH queries ran ~0.2-0.3s hotter purely from
     # position). Symmetric: the DuckDB side gets its own per-query
     # warm runs.
-    from pyspark.sql import functions as _F
-
-    from etl_macropulse_br_spark.sources.files import TESTDATA_TABLES
-
     for t in TESTDATA_TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
-    _d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    _li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    from pyspark.sql import Window as _W
-
-    _w = _W.partitionBy(_F.col("doc_id") % 8).orderBy("doc_id")
-    _shapes = [
-        _d.select("doc_id", _F.row_number().over(_w).alias("rn")),
-        _d.alias("a").join(_d.alias("b"), "doc_id"),
-        _d.select(
-            "doc_id", _F.explode(_F.split("text", " ")).alias("tok")
-        )
-        .select("doc_id", _F.md5("tok").alias("h"))
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    w = Window.partitionBy(F.col("doc_id") % 8).orderBy("doc_id")
+    shapes = [
+        d.select("doc_id", F.row_number().over(w).alias("rn")),
+        d.alias("a").join(d.alias("b"), "doc_id"),
+        d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+        .select("doc_id", F.md5("tok").alias("h"))
         .groupBy("doc_id")
-        .agg(_F.count(_F.lit(1))),
-        _d.orderBy(_F.col("doc_id").desc()).limit(5),
-        _li.groupBy("l_returnflag").agg(
-            _F.sum("l_quantity"), _F.avg("l_extendedprice")
+        .agg(F.count(F.lit(1))),
+        d.orderBy(F.col("doc_id").desc()).limit(5),
+        li.groupBy("l_returnflag").agg(
+            F.sum("l_quantity"), F.avg("l_extendedprice")
         ),
     ]
     # three passes: C2 compiles shared operator classes in the
@@ -209,68 +182,115 @@ def _spark_phase(
     # running partially-interpreted code (measured: the same query
     # 0.42s at registry position 1 vs 0.28s fully warm)
     for _ in range(3):
-        for _s in _shapes:
-            _s.write.mode("overwrite").format("noop").save()
+        for shape in shapes:
+            shape.write.mode("overwrite").format("noop").save()
+
+
+def best_of(
+    spark, build, data_dir: str, n_runs: int, group: str
+) -> tuple[float, float, bool]:
+    """Warm min-of-``n_runs`` noop-sink seconds of the plan
+    ``build(spark, data_dir)``.
+
+    Returns ``(best_sec, jobs_per_run, persists)``: jobs are counted
+    in job group ``group``, which only the timed runs use, and
+    ``persists`` says whether the plan build registered a persisted
+    intermediate. Every cache registered by then is released on
+    return."""
+    from etl_macropulse_br_spark.operators.util import (
+        persisted_count,
+        unpersist_candidates,
+    )
+
+    def run(df) -> None:
+        # noop sink: executes the FULL plan (a count() would let
+        # Catalyst prune the projected work away)
+        df.write.mode("overwrite").format("noop").save()
 
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    sc.setJobGroup(f"{group}:warm", group)
+    # plan built once (prepared-statement reuse — see module
+    # docstring) and untimed warmup runs, symmetric with the DuckDB
+    # side's warm runs (absorbs first-run codegen JIT: measured up
+    # to 4s on the window-heavy plans)
+    n_persisted_before = persisted_count()
+    df = build(spark, data_dir)
+    # plans that persist an intermediate (LSH candidate sets, BM25
+    # tf) may NOT reuse plan or cache across timed runs — the warm
+    # cache would shrink the timed number to a fraction of the
+    # pipeline. They rebuild cold inside every run (plan build
+    # billed) and release caches between runs. Detected by THIS
+    # build registering a persisted frame (delta, not absolute
+    # state).
+    persists = persisted_count() > n_persisted_before
+    # TWO untimed warm executions: the first compiles this plan's
+    # generated code, the second lets C2 finish replacing it —
+    # min-of-3 after one warm run still caught half-compiled code on
+    # early-position queries.
+    run(df)
+    run(df)
+    sc.setJobGroup(group, group)
+    best = float("inf")
+    for _ in range(n_runs):
+        if persists:
+            unpersist_candidates()
+            t0 = time.perf_counter()
+            run(build(spark, data_dir))
+        else:
+            t0 = time.perf_counter()
+            run(df)
+        best = min(best, time.perf_counter() - t0)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group)) / n_runs
+    unpersist_candidates()
+    return best, jobs, persists
+
+
+def _spark_phase(
+    sf_dir: str,
+    n_runs: int,
+    group_prefix: str,
+    companion: bool,
+) -> dict:
+    """One full Spark measurement pass: fresh session, full warmup,
+    per-query warm min-of-``n_runs``. Returns timings plus (pass 1
+    only) job counts, the with-plan-build companion, and the null-job
+    floor. Two passes exist because the box's background noise drifts
+    in multi-minute bursts (see PLANS.md "Run-to-run noise floor"):
+    a burst overlapping one pass inflates every query in it, and the
+    per-query min across two passes separated by the DuckDB phase
+    discards it — the same estimator min-of-N applies within a pass.
+    """
+    from etl_macropulse_br_spark.operators.util import unpersist_candidates
+    from etl_macropulse_br_spark.plans.queries import QUERIES
+    from etl_macropulse_br_spark.session import get_spark
+
+    # The bench inputs are a few MB of parquet: run under the
+    # small-input profile (static partitioning, AQE off). The cluster
+    # profile's AQE barriers cost more than these stages run; at real
+    # scale the default profile applies. See session.get_spark.
+    spark = get_spark(app_name="bench", profile="small-input")
+    warm_up(spark, sf_dir)
+
+    sc = spark.sparkContext
     timings: dict[str, float] = {}
     jobs_per_query: dict[str, float] = {}
     timings_with_build: dict[str, float] = {}
 
     for name in bench_queries():
         fn = QUERIES[name]
-        sc.setJobGroup(f"{group_prefix}:{name}:warm", name)
-        # plan built once (prepared-statement reuse — see module
-        # docstring) and untimed warmup runs, symmetric with the
-        # DuckDB side's warm runs (absorbs first-run codegen JIT:
-        # measured up to 4s on the window-heavy plans)
-        n_persisted_before = persisted_count()
-        df = fn(spark, sf_dir)
-        # queries that persist an intermediate (LSH candidate sets)
-        # may NOT reuse plan or cache across timed runs — the warm
-        # cache would shrink the timed number to a fraction of the
-        # pipeline. They rebuild cold inside every run (plan build
-        # billed) and release caches between runs. Detected by THIS
-        # query's plan build registering a persisted frame (delta,
-        # not absolute state).
-        uses_cache = persisted_count() > n_persisted_before
-        # TWO untimed warm executions: the first compiles this plan's
-        # generated code, the second lets C2 finish replacing it —
-        # min-of-3 after one warm run still caught half-compiled
-        # code on early-position queries.
-        df.write.mode("overwrite").format("noop").save()
-        df.write.mode("overwrite").format("noop").save()
-        sc.setJobGroup(f"{group_prefix}:{name}", name)
-        best = float("inf")
-        for _ in range(n_runs):
-            if uses_cache:
-                unpersist_candidates()
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-            else:
-                t0 = time.perf_counter()
-                # noop sink: executes the FULL plan (a count() would
-                # let Catalyst prune the projected work away).
-                df.write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
-        jobs_per_query[name] = round(
-            len(tracker.getJobIdsForGroup(f"{group_prefix}:{name}"))
-            / n_runs,
-            1,
+        best, jobs, persists = best_of(
+            spark, fn, sf_dir, n_runs, f"{group_prefix}:{name}"
         )
-        unpersist_candidates()
+        timings[name] = round(best, 3)
+        jobs_per_query[name] = round(jobs, 1)
         # with-plan-build companion (pass 1 only): one run that pays
         # Python-side plan construction (fn()) PLUS execution, JIT
         # already warm — the r2-comparable framing, published so the
         # prepared-statement methodology is auditable against it.
-        # Cache-using queries already rebuild plan+caches inside
-        # every timed run, so their min IS the with-build number.
+        # Persisting queries already rebuild plan+caches inside every
+        # timed run, so their min IS the with-build number.
         if companion:
-            if uses_cache:
+            if persists:
                 timings_with_build[name] = timings[name]
             else:
                 sc.setJobGroup(f"{group_prefix}:{name}:build", name)

@@ -103,7 +103,7 @@ Late-r5 and r6 aux additions (all locally oracle-gated):
   (directional sub-document duplication, rare-shingle blocking).
   Engine-only (no DuckDB analogue, pytest/differential-gated):
   image_dhash/image_near_dups, audio_ehash/audio_near_dups,
-  streaming text_dedup_stream, transformWithStateInPandas
+  streaming text_dedup_stream, native update-mode
   running_user_stats, SeriesExplode UDTF, JSONL/ORC sources.
 r7 aux additions (all locally oracle-gated at both scales under
   both sessions):

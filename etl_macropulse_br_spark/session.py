@@ -18,10 +18,44 @@ here encodes the cluster-minded defaults:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# spark.driver.memory syntax: a positive size, MiB when unsuffixed
+_JVM_SIZE = re.compile(r"[1-9][0-9]*([kmgtp]b?)?", re.IGNORECASE)
+
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """The ``spark.driver.memory`` a new session gets.
+
+    ``$SPARK_GRAFT_DRIVER_MEM`` wins when set; a value the JVM would
+    reject fails here, naming the variable. Otherwise half the
+    host's ``MemTotal``, capped at 16g: in local mode the driver is
+    the only JVM, and a heap sized past physical memory on a
+    swapless host ends in the OOM killer rather than in GC. 16g where
+    ``meminfo`` does not exist."""
+    raw = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if raw is not None:
+        if not _JVM_SIZE.fullmatch(raw.strip()):
+            raise ValueError(
+                "SPARK_GRAFT_DRIVER_MEM must be a JVM memory size "
+                f"such as 1g or 512m, got {raw!r}"
+            )
+        return raw.strip()
+    try:
+        with open(meminfo) as fh:
+            kib = next(
+                int(line.split()[1])
+                for line in fh
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return "16g"
+    half_mib = kib // 2 // 1024
+    return "16g" if half_mib >= 16 * 1024 else f"{half_mib}m"
 
 
 def get_spark(
@@ -54,6 +88,7 @@ def get_spark(
       counts.
     """
     master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    driver_mem = driver_memory()
     if shuffle_partitions is None:
         # The small-input static partition count is deploy-time
         # sizing like everything else in this profile; the env knob
@@ -86,7 +121,7 @@ def get_spark(
         .appName(app_name)
         # local mode defaults the (only) JVM to 1g — constant GC under
         # 32 threads. Effective only at JVM launch; harmless later.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config(
             "spark.sql.adaptive.enabled",

@@ -1,23 +1,16 @@
-"""Custom stateful streaming via ``transformWithStateInPandas`` —
-the Spark 4 arbitrary-state v2 API (typed state handles, timers),
-complementing the v1 ``applyInPandasWithState`` sessionizer in
-``streaming/sessions.py``.
+"""Per-user RUNNING lifetime stats (event count, first/last event
+time) as a native streaming aggregation.
 
-Operator: per-user RUNNING lifetime stats (event count, first/last
-event time). Each micro-batch updates a single ValueState row per
-user and emits the refreshed totals (Update mode) — the streaming
-twin of the batch ``groupBy(user).agg(count, min(ts), max(ts))``,
-which the differential test replays on identical input.
+``groupBy(user_id).agg(count, min(ts), max(ts))`` in Update mode:
+Spark keeps one partial-aggregate row per user in the state store
+and each micro-batch re-emits the refreshed totals of the users it
+touched. It is the same plan as the batch aggregate the differential
+test replays on identical input, so stream and batch cannot drift.
 
 State is one fixed-width row per user — O(distinct users), the
-minimum any lifetime aggregate needs; timestamps are stored as
-epoch MICROSECONDS (long) so state encoding never depends on
-session timezone. Requires the RocksDB state store provider (v2
-state API), which ships in the Spark distribution, AND the
-``protobuf`` Python package (the v2 state protocol is proto-based;
-Spark raises ``STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE``
-without it). The differential test skips when protobuf is absent —
-same feature-flag convention as the PIL-gated codecs.
+minimum any lifetime aggregate needs. No watermark: lifetime stats
+never finalize, so state is never evicted (callers bound the key
+space, as for any unwatermarked aggregate).
 
 Reference scope: the reference is strictly batch (SURVEY.md §2.11);
 extension surface.
@@ -25,81 +18,26 @@ extension surface.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-OUTPUT_SCHEMA = (
-    "user_id long, n_events long, first_ts timestamp, last_ts timestamp"
-)
-_STATE_SCHEMA = "n long, first_us long, last_us long"
-
-
-class RunningUserStats(StatefulProcessor):
-    """ValueState-per-user running (count, first, last)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:  # noqa: D102
-        self._agg = handle.getValueState("agg", _STATE_SCHEMA)
-
-    def handleInputRows(  # noqa: D102
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if self._agg.exists():
-            n, first_us, last_us = self._agg.get()
-        else:
-            n, first_us, last_us = 0, None, None
-        for pdf in rows:
-            if len(pdf) == 0:
-                continue
-            us = (pdf["ts"].astype("int64") // 1000).tolist()
-            n += len(us)
-            lo, hi = min(us), max(us)
-            first_us = lo if first_us is None else min(first_us, lo)
-            last_us = hi if last_us is None else max(last_us, hi)
-        self._agg.update((n, first_us, last_us))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [n],
-                "first_ts": [pd.Timestamp(first_us, unit="us")],
-                "last_ts": [pd.Timestamp(last_us, unit="us")],
-            }
-        )
-
-    def close(self) -> None:  # noqa: D102
-        # no resources to release — ValueState is engine-owned; log
-        # so the intentional no-op is visible in debug traces
-        import logging
-
-        logging.getLogger(__name__).debug(
-            "RunningUserStats.close(): no-op (state is engine-owned)"
-        )
+from pyspark.sql import functions as F
 
 
 def running_user_stats(
     stream: DataFrame, state_store: str | None = None
 ) -> DataFrame:
-    """Wire the processor: one hash exchange on user_id (the same
-    single shuffle any per-key stateful op needs), Update output.
+    """Running ``(user_id, n_events, first_ts, last_ts)`` per user;
+    start the query with ``outputMode("update")``. One hash exchange
+    on user_id, the single shuffle any per-key stateful op needs.
     ``state_store="rocksdb"`` selects the production state backend
-    (session-scoped — streaming/state_store.py); note the v2 state
-    protocol REQUIRES RocksDB in any case, so the knob here mostly
-    serves API uniformity."""
+    (session-scoped — streaming/state_store.py)."""
     if state_store is not None:
         from etl_macropulse_br_spark.streaming.state_store import (
             set_state_store,
         )
 
         set_state_store(stream.sparkSession, state_store)
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningUserStats(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
+    return stream.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.min("ts").alias("first_ts"),
+        F.max("ts").alias("last_ts"),
     )

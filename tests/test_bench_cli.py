@@ -1,8 +1,9 @@
-"""Pins for bench.py's non-measurement surfaces (r15): the
-self-reporting weak-set rule (VERDICT r14 next #5) and the
-``--queries`` subset flag (next #7). Pure-function tests — no Spark
-session, no timing; the measurement methodology itself is covered by
-the per-round BENCH artifacts."""
+"""Pins for bench.py (r15): the self-reporting weak-set rule
+(VERDICT r14 next #5), the ``--queries`` subset flag (next #7) and
+tools/ab_query.py's name checks — pure-function and subprocess tests,
+no Spark session — plus the shared timing core ``best_of`` on tiny
+frames. The measured numbers themselves are covered by the per-round
+BENCH artifacts."""
 
 from __future__ import annotations
 
@@ -12,6 +13,8 @@ import subprocess
 import sys
 
 import bench
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_weak_query_rule_flags_genuine_compute_gaps():
@@ -92,9 +95,95 @@ def test_bench_cli_rejects_unknown_query_names():
         [sys.executable, "bench.py", "--queries", "no_such_query"],
         capture_output=True,
         text=True,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        cwd=ROOT,
         timeout=120,
     )
     assert proc.returncode != 0
     assert "no_such_query" in proc.stderr
     assert "q1_pricing_summary" in proc.stderr  # names the valid set
+
+
+def _ab_query(*args):
+    return subprocess.run(
+        [sys.executable, "tools/ab_query.py", *args],
+        capture_output=True,
+        text=True,
+        cwd=ROOT,
+        timeout=120,
+    )
+
+
+def test_ab_query_rejects_unknown_names_before_spark_starts():
+    """One bad name among good ones fails the whole run up front,
+    naming it and the valid set — not after minutes of warm-up."""
+    proc = _ab_query("q1_pricing_summary", "no_such_query")
+    assert proc.returncode != 0
+    assert "no_such_query" in proc.stderr
+    assert "docs_near_dups" in proc.stderr  # names the valid set
+    # no JVM was started: Spark's start-up banner is absent
+    assert "sc.setLogLevel" not in proc.stderr
+    assert proc.stdout == ""
+
+
+def test_ab_query_without_names_is_a_usage_error():
+    proc = _ab_query()
+    assert proc.returncode != 0
+    assert "usage" in proc.stderr
+
+
+def test_ab_query_list_prints_the_registry():
+    from etl_macropulse_br_spark.plans.queries import QUERIES
+
+    proc = _ab_query("--list")
+    assert proc.returncode == 0
+    assert proc.stdout.split() == list(QUERIES)
+
+
+def test_best_of_rebuilds_a_persisting_plan_on_every_timed_run(spark):
+    """A plan whose build registers a persisted frame must not time a
+    warm cache: it is rebuilt cold for every timed run, and every
+    cache it registered is released on return."""
+    from etl_macropulse_br_spark.operators.util import (
+        persisted_count,
+        register_persisted,
+        unpersist_candidates,
+    )
+
+    unpersist_candidates()
+    builds = []
+
+    def build(s, data_dir):
+        builds.append(data_dir)
+        return register_persisted(s.range(200)).selectExpr("id * 2 AS x")
+
+    best, jobs, persists = bench.best_of(
+        spark, build, "tiny", 3, "test:best_of:persisting"
+    )
+    assert persists
+    assert builds == ["tiny"] * (1 + 3)  # once for warm-up, once per run
+    assert persisted_count() == 0
+    assert 0 < best < 60
+    assert jobs > 0
+
+
+def test_best_of_reuses_a_plain_plan(spark):
+    from etl_macropulse_br_spark.operators.util import (
+        persisted_count,
+        unpersist_candidates,
+    )
+
+    unpersist_candidates()
+    builds = []
+
+    def build(s, data_dir):
+        builds.append(data_dir)
+        return s.range(200).selectExpr("id % 7 AS k").groupBy("k").count()
+
+    best, jobs, persists = bench.best_of(
+        spark, build, "tiny", 3, "test:best_of:plain"
+    )
+    assert not persists
+    assert builds == ["tiny"]  # built once, executed 2 + 3 times
+    assert persisted_count() == 0
+    assert 0 < best < 60
+    assert jobs > 0

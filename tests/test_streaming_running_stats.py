@@ -1,12 +1,11 @@
-"""transformWithStateInPandas running user stats: final streamed
-state must equal the batch aggregate on identical input, across
-micro-batch boundaries."""
+"""Native update-mode running user stats: final streamed state must
+equal the batch aggregate on identical input, across micro-batch
+boundaries."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -26,10 +25,6 @@ ROCKSDB = (
 
 
 def test_running_stats_stream_matches_batch_aggregate(spark, tmp_path):
-    # the v2 state protocol is protobuf-based; without the Python
-    # package the TWS driver worker cannot start (documented in the
-    # operator module — same convention as the PIL-gated codecs)
-    pytest.importorskip("google.protobuf")
     from etl_macropulse_br_spark.streaming.running_stats import (
         running_user_stats,
     )
@@ -105,59 +100,3 @@ def test_running_stats_stream_matches_batch_aggregate(spark, tmp_path):
     }
     assert final == batch
     assert final[1][0] == 3  # state carried across micro-batches
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.state = _FakeValueState()
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.state
-
-
-def test_processor_state_machine_without_engine():
-    """The processor's per-batch fold is pure Python — drive it
-    directly so the state logic is pinned even where the engine-side
-    protobuf dependency is unavailable."""
-    import pandas as pd
-
-    from etl_macropulse_br_spark.streaming.running_stats import (
-        RunningUserStats,
-    )
-
-    p = RunningUserStats()
-    p.init(_FakeHandle())
-
-    def batch(ts_list):
-        return iter(
-            [pd.DataFrame({"ts": pd.to_datetime(ts_list)})]
-        )
-
-    out1 = list(
-        p.handleInputRows((7,), batch(["2026-03-01 08:00", "2026-03-01 08:02"]), None)
-    )[0]
-    assert out1["n_events"].iloc[0] == 2
-    # second micro-batch folds ONTO existing state
-    out2 = list(
-        p.handleInputRows((7,), batch(["2026-03-01 07:30"]), None)
-    )[0]
-    assert out2["n_events"].iloc[0] == 3
-    assert out2["first_ts"].iloc[0] == pd.Timestamp("2026-03-01 07:30")
-    assert out2["last_ts"].iloc[0] == pd.Timestamp("2026-03-01 08:02")
-    # empty batch: state unchanged, still emitted
-    out3 = list(p.handleInputRows((7,), iter([pd.DataFrame({"ts": pd.to_datetime([])})]), None))[0]
-    assert out3["n_events"].iloc[0] == 3

@@ -1,1114 +1,68 @@
-"""Per-query A/B measurement harness (r13 — VERDICT r12 next #3).
+"""Per-query A/B timing with bench.py's pass-1 method.
 
-Measures named plan VARIANTS with exactly bench.py's pass-1
-methodology — small-input session, full shape warmup, plan built
-once, two untimed warm executions, min-of-N timed noop-sink runs,
-job counts via job groups — so an A/B number here is directly
-comparable to a bench row. Variants are registered in VARIANTS
-below: each entry maps a variant name to a (spark, sf_dir) ->
-DataFrame callable. The baseline for a declared query is the
-registry entry itself.
+Times registry queries (``QUERIES``) through bench.py's own core:
+the small-input session, ``bench.warm_up`` and ``bench.best_of``
+(plan built once, two untimed warm runs, min-of-N noop-sink runs,
+jobs counted by job group). A number here is therefore directly
+comparable to a bench row. A name may repeat, for ABBA ordering;
+each occurrence gets its own job group.
 
 Usage::
 
-    python tools/ab_query.py q3_shipping_priority q3_all_shuffle ...
-    python tools/ab_query.py --all          # every registered variant
+    python tools/ab_query.py q3_shipping_priority docs_near_dups ...
     python tools/ab_query.py --list
 
-Prints one line per variant: name, min seconds, jobs/run. Rejected
-variants get recorded with their numbers in PLANS.md; accepted ones
-become the registry plan (and this file keeps the losing shape
-reproducible).
+Prints one line per name: min seconds and jobs per run. ``AB_RUNS``
+sets N (default 6); ``SPARK_GRAFT_SF_DIR`` the input directory.
+
+To A/B a challenger plan, register it in the query registry on a
+branch and time both names. The r13–r17 challengers (all rejected,
+verdicts in PLANS.md) are kept reproducible in
+``git show 8bfbdf4:tools/ab_query.py``.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-from pyspark.sql import functions as F  # noqa: E402
-
-
-def _sh(df):
-    """Force shuffle-hash on this join side (A/B device: suppresses
-    both the broadcast_small hint and the 16m auto-broadcast)."""
-    return df.hint("shuffle_hash")
-
-
-# ----------------------------------------------------------------
-# variant plans — each a full (spark, sf_dir) -> DataFrame callable
-# ----------------------------------------------------------------
-
-
-def q3_all_shuffle(spark, sf_dir):
-    """q3 with every join shuffle-hash (no broadcast builds)."""
-    from etl_macropulse_br_spark.plans.queries import _scaled, _t
-
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    revenue_scaled = _scaled(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")), 10000
-    )
-    cust_orders = (
-        cust.filter(F.col("c_mktsegment") == "BUILDING")
-        .hint("shuffle_hash")
-        .join(orders, cust.c_custkey == orders.o_custkey)
-        .filter(F.col("o_orderdate") < F.lit("1998-01-01"))
-        .select("o_orderkey", "o_orderdate", "o_orderpriority")
-    )
-    return (
-        li.filter(F.col("l_shipdate") > F.lit("1995-06-30"))
-        .join(_sh(cust_orders), li.l_orderkey == cust_orders.o_orderkey)
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg((F.sum(revenue_scaled) / F.lit(10000.0)).alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
-        .limit(10)
-    )
-
-
-def q5_all_shuffle(spark, sf_dir):
-    """q5 with the orders⋈customer and supplier joins shuffle-hash
-    (dim folds unchanged)."""
-    from etl_macropulse_br_spark.operators.util import (
-        fold_fixed_dim,
-        literal_lookup,
-    )
-    from etl_macropulse_br_spark.plans.queries import _scaled, _t
-
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region")
-
-    regions = fold_fixed_dim(reg, "r_regionkey", "r_name")
-    asia = {
-        k: name
-        for k, (name, rk) in fold_fixed_dim(
-            nat, "n_nationkey", "n_name", "n_regionkey"
-        ).items()
-        if regions.get(rk) == "ASIA"
-    }
-    cust_n = cust.filter(F.col("c_nationkey").isin(list(asia))).select(
-        "c_custkey",
-        "c_nationkey",
-        literal_lookup(asia, "c_nationkey").alias("n_name"),
-    )
-    ord_f = orders.filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01"))
-    ).select("o_orderkey", "o_custkey")
-    cust_orders = ord_f.join(
-        _sh(cust_n), ord_f.o_custkey == cust_n.c_custkey
-    ).select("o_orderkey", "c_nationkey", "n_name")
-    revenue_scaled = _scaled(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")), 10000
-    )
-    joined = li.join(
-        _sh(cust_orders), li.l_orderkey == cust_orders.o_orderkey
-    ).join(
-        _sh(supp),
-        (F.col("l_suppkey") == supp.s_suppkey)
-        & (F.col("c_nationkey") == supp.s_nationkey),
-    )
-    return (
-        joined.groupBy("n_name")
-        .agg((F.sum(revenue_scaled) / F.lit(10000.0)).alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("n_name").asc())
-    )
-
-
-def q7_all_shuffle(spark, sf_dir):
-    """q7 with the supplier/customer/orders joins shuffle-hash."""
-    from etl_macropulse_br_spark.operators.util import (
-        fold_fixed_dim,
-        literal_lookup,
-    )
-    from etl_macropulse_br_spark.plans.queries import _scaled, _t
-
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-
-    pair_nations = {
-        k: v
-        for k, v in fold_fixed_dim(nat, "n_nationkey", "n_name").items()
-        if v in ("NATION_1", "NATION_2")
-    }
-    supp_n = supp.filter(
-        F.col("s_nationkey").isin(list(pair_nations))
-    ).select(
-        "s_suppkey",
-        literal_lookup(pair_nations, "s_nationkey").alias("supp_nation"),
-    )
-    cust_n = cust.filter(
-        F.col("c_nationkey").isin(list(pair_nations))
-    ).select(
-        "c_custkey",
-        literal_lookup(pair_nations, "c_nationkey").alias("cust_nation"),
-    )
-    ord_c = orders.join(
-        _sh(cust_n), orders.o_custkey == cust_n.c_custkey
-    ).select("o_orderkey", "cust_nation")
-    pairs = (
-        (F.col("supp_nation") == "NATION_1")
-        & (F.col("cust_nation") == "NATION_2")
-    ) | (
-        (F.col("supp_nation") == "NATION_2")
-        & (F.col("cust_nation") == "NATION_1")
-    )
-    revenue_scaled = _scaled(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")), 10000
-    )
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1995-01-01"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01"))
-        )
-        .join(_sh(supp_n), li.l_suppkey == supp_n.s_suppkey)
-        .join(_sh(ord_c), li.l_orderkey == ord_c.o_orderkey)
-        .filter(pairs)
-        .groupBy(
-            "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
-        )
-        .agg((F.sum(revenue_scaled) / F.lit(10000.0)).alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    )
-
-
-def ptbr_all_shuffle(spark, sf_dir):
-    """ptbr_roundtrip with the two dictionary joins shuffle-hash
-    (fact pays two exchanges instead of two broadcast builds)."""
-    from etl_macropulse_br_spark.functions.exprs import (
-        parse_date_ddmmyyyy,
-        parse_ptbr_number,
-    )
-    from etl_macropulse_br_spark.plans.queries import _t
-
-    li = _t(spark, sf_dir, "lineitem")
-    dates = li.select("l_shipdate").distinct().select(
-        "l_shipdate",
-        parse_date_ddmmyyyy(
-            F.date_format("l_shipdate", "dd/MM/yyyy")
-        ).alias("reparsed_date"),
-    )
-    pairs = li.select(
-        (F.col("l_orderkey") % 1000).alias("k3"),
-        F.col("l_linenumber").alias("ln"),
-    ).distinct()
-    ptbr_str = F.concat(
-        F.lit("1."),
-        F.lpad(F.col("k3").cast("string"), 3, "0"),
-        F.lit(","),
-        F.lpad(F.col("ln").cast("string"), 2, "0"),
-    )
-    nums = pairs.select(
-        "k3", "ln", parse_ptbr_number(ptbr_str).alias("parsed_value")
-    )
-    fact = li.select(
-        "l_orderkey",
-        "l_linenumber",
-        (F.col("l_orderkey") % 1000).alias("k3"),
-        "l_shipdate",
-    )
-    return (
-        fact.join(
-            _sh(nums),
-            (fact.k3 == nums.k3) & (fact.l_linenumber == nums.ln),
-            "left",
-        )
-        .join(_sh(dates), "l_shipdate", "left")
-        .select(
-            "l_orderkey", "l_linenumber", "parsed_value", "reparsed_date"
-        )
-    )
-
-
-def skew_all_shuffle(spark, sf_dir):
-    """skew_salted_rollup with the salted join's replicated dim
-    shuffle-hash instead of auto-broadcast."""
-    from etl_macropulse_br_spark.plans.queries import _scaled, _t
-
-    ev = _t(spark, sf_dir, "events")
-    hot = F.when(F.col("user_id") % 10 < 5, F.lit(0)).otherwise(
-        F.col("user_id")
-    )
-    fact = ev.select(hot.alias("k"), "value")
-    dim = (
-        fact.select("k")
-        .distinct()
-        .select(
-            "k",
-            F.concat(
-                F.lit("seg_"), (F.col("k") % 7).cast("string")
-            ).alias("segment"),
-        )
-    )
-    n_salt = 8
-    salted = fact.withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(F.col("k"), F.col("value")), F.lit(n_salt)),
-    )
-    replicated = dim.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
-    )
-    joined = salted.join(_sh(replicated), on=["k", "__salt"]).drop(
-        "__salt"
-    )
-    return (
-        joined.groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(_scaled("value")) / F.lit(100.0)).alias("total_value"),
-        )
-        .orderBy("segment")
-    )
-
-
-def q3_inner_shuffle(spark, sf_dir):
-    """q3 keeping the lineitem-probe broadcast but folding the
-    INNER cust⋈orders build to shuffle-hash (removes the nested
-    customer broadcast-build job only)."""
-    from etl_macropulse_br_spark.operators.util import broadcast_small
-    from etl_macropulse_br_spark.plans.queries import _scaled, _t
-
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    revenue_scaled = _scaled(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")), 10000
-    )
-    cust_orders = (
-        cust.filter(F.col("c_mktsegment") == "BUILDING")
-        .hint("shuffle_hash")
-        .join(orders, cust.c_custkey == orders.o_custkey)
-        .filter(F.col("o_orderdate") < F.lit("1998-01-01"))
-        .select("o_orderkey", "o_orderdate", "o_orderpriority")
-    )
-    return (
-        li.filter(F.col("l_shipdate") > F.lit("1995-06-30"))
-        .join(broadcast_small(cust_orders), li.l_orderkey == cust_orders.o_orderkey)
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg((F.sum(revenue_scaled) / F.lit(10000.0)).alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
-        .limit(10)
-    )
-
-
-def q5_inner_shuffle(spark, sf_dir):
-    """q5 keeping both lineitem-probe broadcasts but folding the
-    inner orders⋈customer build to shuffle-hash."""
-    from etl_macropulse_br_spark.operators.util import (
-        broadcast_small,
-        fold_fixed_dim,
-        literal_lookup,
-    )
-    from etl_macropulse_br_spark.plans.queries import _scaled, _t
-
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region")
-
-    regions = fold_fixed_dim(reg, "r_regionkey", "r_name")
-    asia = {
-        k: name
-        for k, (name, rk) in fold_fixed_dim(
-            nat, "n_nationkey", "n_name", "n_regionkey"
-        ).items()
-        if regions.get(rk) == "ASIA"
-    }
-    cust_n = cust.filter(F.col("c_nationkey").isin(list(asia))).select(
-        "c_custkey",
-        "c_nationkey",
-        literal_lookup(asia, "c_nationkey").alias("n_name"),
-    )
-    ord_f = orders.filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01"))
-    ).select("o_orderkey", "o_custkey")
-    cust_orders = ord_f.join(
-        _sh(cust_n), ord_f.o_custkey == cust_n.c_custkey
-    ).select("o_orderkey", "c_nationkey", "n_name")
-    revenue_scaled = _scaled(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")), 10000
-    )
-    joined = li.join(
-        broadcast_small(cust_orders), li.l_orderkey == cust_orders.o_orderkey
-    ).join(
-        F.broadcast(supp),
-        (F.col("l_suppkey") == supp.s_suppkey)
-        & (F.col("c_nationkey") == supp.s_nationkey),
-    )
-    return (
-        joined.groupBy("n_name")
-        .agg((F.sum(revenue_scaled) / F.lit(10000.0)).alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("n_name").asc())
-    )
-
-
-def q7_inner_shuffle(spark, sf_dir):
-    """q7 keeping the lineitem-probe broadcasts but folding the
-    inner orders⋈customer build to shuffle-hash."""
-    from etl_macropulse_br_spark.operators.util import (
-        broadcast_small,
-        fold_fixed_dim,
-        literal_lookup,
-    )
-    from etl_macropulse_br_spark.plans.queries import _scaled, _t
-
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-
-    pair_nations = {
-        k: v
-        for k, v in fold_fixed_dim(nat, "n_nationkey", "n_name").items()
-        if v in ("NATION_1", "NATION_2")
-    }
-    supp_n = supp.filter(
-        F.col("s_nationkey").isin(list(pair_nations))
-    ).select(
-        "s_suppkey",
-        literal_lookup(pair_nations, "s_nationkey").alias("supp_nation"),
-    )
-    cust_n = cust.filter(
-        F.col("c_nationkey").isin(list(pair_nations))
-    ).select(
-        "c_custkey",
-        literal_lookup(pair_nations, "c_nationkey").alias("cust_nation"),
-    )
-    ord_c = orders.join(
-        _sh(cust_n), orders.o_custkey == cust_n.c_custkey
-    ).select("o_orderkey", "cust_nation")
-    pairs = (
-        (F.col("supp_nation") == "NATION_1")
-        & (F.col("cust_nation") == "NATION_2")
-    ) | (
-        (F.col("supp_nation") == "NATION_2")
-        & (F.col("cust_nation") == "NATION_1")
-    )
-    revenue_scaled = _scaled(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")), 10000
-    )
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1995-01-01"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01"))
-        )
-        .join(broadcast_small(supp_n), li.l_suppkey == supp_n.s_suppkey)
-        .join(broadcast_small(ord_c), li.l_orderkey == ord_c.o_orderkey)
-        .filter(pairs)
-        .groupBy(
-            "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
-        )
-        .agg((F.sum(revenue_scaled) / F.lit(10000.0)).alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    )
-
-
-def docs_near_dups_oldshape(spark, sf_dir):
-    """Pre-r13 docs_near_dups: no shuffle-hash hints — the banded
-    self-join and both shingle-set lookups auto-broadcast (separate
-    build jobs per action)."""
-    from etl_macropulse_br_spark.operators.dedup import (
-        minhash_signature_table,
-        shingle_hash_rows,
-        _minhash_banded,
-    )
-    from etl_macropulse_br_spark.plans.queries import _t
-
-    docs = _t(spark, sf_dir, "documents")
-    rows = shingle_hash_rows(docs, "text", "doc_id", 3)
-    sig = minhash_signature_table(docs, "text", "doc_id", 3, 16, rows)
-    banded = _minhash_banded(sig, 16, 4)
-    left, right = banded.alias("l"), banded.alias("r")
-    cands = (
-        left.join(
-            right,
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.band_hash") == F.col("r.band_hash"),
-                F.col("l.id") < F.col("r.id"),
-            ],
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
-    sh = rows.groupBy("id").agg(F.collect_set("sh_h").alias("sh"))
-    j1 = cands.join(sh, F.col("id_a") == sh["id"]).select(
-        "id_a", "id_b", F.col("sh").alias("sh_a")
-    )
-    return (
-        j1.join(sh, F.col("id_b") == sh["id"])
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("sh_a", "sh"))
-                / F.size(F.array_union("sh_a", "sh"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.5)
-    )
-
-
-def docs_curated_oldshape(spark, sf_dir):
-    """Pre-r13 docs_curated: verdict-side joins auto-broadcast and
-    the near-dup subtree uses the un-hinted old shape."""
-    from etl_macropulse_br_spark.functions.hashing import md5_long
-    from etl_macropulse_br_spark.operators.dedup import exact_dedup
-    from etl_macropulse_br_spark.operators.text import repetition_stats
-    from etl_macropulse_br_spark.plans.queries import _t
-
-    docs = _t(spark, sf_dir, "documents")
-    quality_ok = repetition_stats(docs).filter(
-        (F.col("top_word_ratio") <= 0.14)
-        & (F.col("dup_bigram_ratio") <= 0.08)
-        & (F.col("uniq_token_ratio") >= 0.3)
-    ).select("doc_id")
-    winners = exact_dedup(docs).select(F.col("keep_id").alias("doc_id"))
-    losers = (
-        docs_near_dups_oldshape(spark, sf_dir)
-        .select(F.col("id_b").alias("doc_id"))
-        .distinct()
-    )
-    bucket = md5_long(F.col("doc_id").cast("string")) % 100
-    split = F.when(bucket < 80, F.lit("train")).otherwise(F.lit("val"))
-    return (
-        docs.select("doc_id")
-        .join(quality_ok, "doc_id")
-        .join(winners, "doc_id")
-        .join(losers, "doc_id", "left_anti")
-        .select("doc_id", split.alias("split"))
-    )
-
-
-def docs_near_dups_bandhint(spark, sf_dir):
-    """Only the banded self-join hinted shuffle_hash; shingle-set
-    lookups stay auto-broadcast."""
-    from etl_macropulse_br_spark.operators.dedup import (
-        minhash_signature_table,
-        shingle_hash_rows,
-        _minhash_banded,
-    )
-    from etl_macropulse_br_spark.plans.queries import _t
-
-    docs = _t(spark, sf_dir, "documents")
-    rows = shingle_hash_rows(docs, "text", "doc_id", 3)
-    sig = minhash_signature_table(docs, "text", "doc_id", 3, 16, rows)
-    banded = _minhash_banded(sig, 16, 4)
-    left, right = banded.alias("l"), banded.alias("r").hint("shuffle_hash")
-    cands = (
-        left.join(
-            right,
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.band_hash") == F.col("r.band_hash"),
-                F.col("l.id") < F.col("r.id"),
-            ],
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
-    sh = rows.groupBy("id").agg(F.collect_set("sh_h").alias("sh"))
-    j1 = cands.join(sh, F.col("id_a") == sh["id"]).select(
-        "id_a", "id_b", F.col("sh").alias("sh_a")
-    )
-    return (
-        j1.join(sh, F.col("id_b") == sh["id"])
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("sh_a", "sh"))
-                / F.size(F.array_union("sh_a", "sh"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.5)
-    )
-
-
-def docs_near_dups_shhint(spark, sf_dir):
-    """Only the shingle-set lookups hinted shuffle_hash; banded
-    self-join stays auto-broadcast."""
-    from etl_macropulse_br_spark.operators.dedup import (
-        minhash_signature_table,
-        shingle_hash_rows,
-        _minhash_banded,
-    )
-    from etl_macropulse_br_spark.plans.queries import _t
-
-    docs = _t(spark, sf_dir, "documents")
-    rows = shingle_hash_rows(docs, "text", "doc_id", 3)
-    sig = minhash_signature_table(docs, "text", "doc_id", 3, 16, rows)
-    banded = _minhash_banded(sig, 16, 4)
-    left, right = banded.alias("l"), banded.alias("r")
-    cands = (
-        left.join(
-            right,
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.band_hash") == F.col("r.band_hash"),
-                F.col("l.id") < F.col("r.id"),
-            ],
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
-    sh = rows.groupBy("id").agg(F.collect_set("sh_h").alias("sh"))
-    j1 = cands.join(sh.hint("shuffle_hash"), F.col("id_a") == sh["id"]).select(
-        "id_a", "id_b", F.col("sh").alias("sh_a")
-    )
-    return (
-        j1.join(sh.hint("shuffle_hash"), F.col("id_b") == sh["id"])
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("sh_a", "sh"))
-                / F.size(F.array_union("sh_a", "sh"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.5)
-    )
-
-
-def zscore_events_aggjoin(spark, sf_dir):
-    """zscore_events with the whole-group window replaced by
-    groupBy-moments + broadcast join back (r14 — VERDICT r13 next
-    #3). The window shape exchanges the FULL fact by event_type and
-    sorts it inside WindowExec; the agg shape partial-aggregates
-    map-side down to |groups| rows, broadcasts them, and never
-    sorts. Same exact decimal moments, same double conversion
-    points, same overflow guard — value-identical by construction
-    (sums of exact integers are order-independent)."""
-    from etl_macropulse_br_spark.plans.queries import _t
-
-    ev = _t(spark, sf_dir, "events")
-    x = F.col("value") * 100
-    c = (
-        F.when(x < 0, x - F.lit(0.5))
-        .otherwise(x + F.lit(0.5))
-        .cast("bigint")
-    )
-    base = ev.select("event_id", "event_type", "value", c.alias("__c"))
-    cd = F.col("__c").cast("decimal(19,0)")
-    mom = base.groupBy("event_type").agg(
-        F.count("__c").alias("__n"),
-        F.sum(cd).alias("__s"),
-        F.sum(cd * cd).alias("__ssq"),
-    )
-    j = base.join(F.broadcast(mom), "event_type")
-    n, s, ssq = F.col("__n"), F.col("__s"), F.col("__ssq")
-    mean_cents = s.cast("double") / n
-    var_cents = (
-        ssq.cast("double") - (s * s).cast("double") / n
-    ) / (n - 1)
-    z = (F.col("__c") - mean_cents) / F.sqrt(var_cents)
-    moments_ok = (n < 2) | (ssq.isNotNull() & (s * s).isNotNull())
-    return j.select(
-        "event_id",
-        "event_type",
-        "value",
-        F.coalesce(
-            F.assert_true(
-                moments_ok,
-                F.lit(
-                    "zscore_expr: group moments overflowed "
-                    "decimal(38,0)"
-                ),
-            ).cast("double"),
-            F.when((n >= 2) & (var_cents > 0), z),
-        ).alias("zscore"),
-    )
-
-
-def props_get_json_object(spark, sf_dir):
-    """props_struct_parse with get_json_object instead of schema'd
-    from_json: one JSON path probe per row instead of a full
-    struct-schema parse. try_cast keeps the ANSI (driver) session
-    coercive like the engine session."""
-    from etl_macropulse_br_spark.plans.queries import _t
-
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.get_json_object("props", "$.k").try_cast("bigint").alias("k"),
-    ).filter(F.col("k") % 10 == 0)
-
-
-def props_json_tuple(spark, sf_dir):
-    """props_struct_parse with json_tuple (generator-based Jackson
-    streaming extractor) instead of schema'd from_json. r15: the
-    VERDICT r14 wrong-#3 challenger — from_json with a schema
-    projecting only the consumed fields — is ALREADY the registry
-    plan (the payload is single-field ``{"k": N}`` and the query
-    parses ``k BIGINT`` only; pinned in test_plan_audit), so this is
-    the remaining untried parse path, measured for completeness.
-    Like get_json_object (r14, rejected), shipping it would trade
-    away the schema'd-from_json coverage row."""
-    from etl_macropulse_br_spark.plans.queries import _t
-
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.select(
-            "event_id", F.json_tuple(F.col("props"), "k").alias("ks")
-        )
-        .select("event_id", F.col("ks").try_cast("bigint").alias("k"))
-        .filter(F.col("k") % 10 == 0)
-    )
-
-
-def q10_all_shuffle(spark, sf_dir):
-    """q10 with every join shuffle-hash: trades the two broadcast
-    BUILD jobs (each a blocking collect-and-publish) for in-job
-    exchanges — fewer jobs, more shuffled bytes."""
-    from etl_macropulse_br_spark.plans.queries import _scaled, _t
-    from etl_macropulse_br_spark.operators.util import (
-        fold_fixed_dim,
-        literal_lookup,
-    )
-
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    nat = _t(spark, sf_dir, "nation")
-
-    ord_q = orders.filter(
-        (F.col("o_orderdate") >= F.lit("1996-10-01"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01"))
-    ).select("o_orderkey", "o_custkey")
-    nations = fold_fixed_dim(nat, "n_nationkey", "n_name")
-    cust_n = cust.filter(
-        F.col("c_nationkey").isin(list(nations))
-    ).select(
-        "c_custkey",
-        "c_name",
-        "c_acctbal",
-        literal_lookup(nations, "c_nationkey").alias("n_name"),
-    )
-    build = ord_q.join(
-        _sh(cust_n), ord_q.o_custkey == cust_n.c_custkey
-    ).select("o_orderkey", "c_custkey", "c_name", "c_acctbal", "n_name")
-    revenue_scaled = _scaled(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")), 10000
-    )
-    return (
-        li.filter(F.col("l_returnflag") == "R")
-        .join(_sh(build), li.l_orderkey == build.o_orderkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg((F.sum(revenue_scaled) / F.lit(10000.0)).alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
-        .limit(20)
-    )
-
-
-def _emb_near_dups_variant(pre=None, precast=False, threshold=0.95):
-    """r16 embedding_near_dups challengers (both value-identical to
-    the registry plan, verified by sorted-collect comparison at
-    threshold 0.5; both REJECTED — numbers in PLANS.md r16 ledger):
-    ``precast`` pre-casts the lookup vectors to double (drops two
-    interpreted per-pair transform casts, but v_a is selected FROM
-    the lookup and crosses the second lookup's exchange per PAIR —
-    2x the pair-sized shuffle bytes at corpus scale); ``pre`` adds a
-    repartition before the banding explode ("rr" round-robin,
-    "hash" by id — parallelizes the single-partition scan and the
-    hash form removes the post-aggregate id exchange, but the full
-    query stayed inside box noise)."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from etl_macropulse_br_spark.operators.dedup import srp_banded
-        from etl_macropulse_br_spark.operators.similarity import (
-            _as_double_array,
-            dot,
-            norm,
-        )
-        from etl_macropulse_br_spark.plans.queries import _t
-
-        emb = _t(spark, sf_dir, "embeddings")
-        src = emb
-        if pre == "rr":
-            src = emb.repartition(32)
-        elif pre == "hash":
-            src = emb.repartition(32, "vec_id")
-        banded = srp_banded(src, "embedding", "vec_id", 3, 8, 64)
-        left, right = banded.alias("l"), banded.alias("r")
-        cands = (
-            left.join(
-                right.hint("shuffle_hash"),
-                on=[
-                    F.col("l.band") == F.col("r.band"),
-                    F.col("l.bucket") == F.col("r.bucket"),
-                    F.col("l.id") < F.col("r.id"),
-                ],
-            )
-            .select(
-                F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b")
-            )
-            .distinct()
-        )
-        v = F.col("embedding")
-        e = emb.select(
-            F.col("vec_id").alias("id"),
-            (_as_double_array(v) if precast else v).alias("v"),
-            norm(_as_double_array(v)).alias("nrm"),
-        )
-        j1 = cands.join(
-            e.hint("shuffle_hash"), F.col("id_a") == e["id"]
-        ).select(
-            "id_a", "id_b", F.col("v").alias("v_a"), F.col("nrm").alias("n_a")
-        )
-        va, vb = F.col("v_a"), F.col("v")
-        if not precast:
-            va, vb = _as_double_array(va), _as_double_array(vb)
-        return (
-            j1.join(e.hint("shuffle_hash"), F.col("id_b") == e["id"])
-            .select(
-                "id_a",
-                "id_b",
-                (dot(va, vb) / (F.col("n_a") * F.col("nrm"))).alias(
-                    "cosine"
-                ),
-            )
-            .filter(F.col("cosine") >= threshold)
-        )
-
-    return run
-
-
-def dedup_first_event_unprojected(spark, sf_dir):
-    """Pre-r16 dedup_first_event: dedup over ALL event columns, the
-    unused props JSON packed into the min_by payload struct and the
-    projection applied after (the shipped plan projects first)."""
-    from etl_macropulse_br_spark.operators.silver import dedup_keep_first
-    from etl_macropulse_br_spark.plans.queries import _t
-
-    ev = _t(spark, sf_dir, "events")
-    return dedup_keep_first(
-        ev, keys=["user_id", "event_type"], order=["ts", "event_id"]
-    ).select("user_id", "event_type", "event_id", "ts", "value")
-
-
-def _bm25_from_tf(tf, n_docs, avgdl, qt, k=10, k1=1.2, b=0.75):
-    """The scoring tail of operators/text.py:bm25_topk, verbatim,
-    from a (id, tok, tf, dl) table on — shared by the r17 tf-pass
-    challengers so only the tf construction differs."""
-    from pyspark.sql import Window
-
-    w_tok = Window.partitionBy("tok")
-    scored = (
-        tf.withColumn("df_t", F.count(F.lit(1)).over(w_tok))
-        .withColumn("n_docs", F.lit(n_docs))
-        .withColumn("avgdl", F.lit(avgdl))
-    )
-    idf = (F.col("n_docs") - F.col("df_t") + F.lit(0.5)) / (
-        F.col("df_t") + F.lit(0.5)
-    )
-    denom = F.col("tf") + F.lit(k1) * (
-        F.lit(1.0) - F.lit(b) + F.lit(b) * (F.col("dl") / F.col("avgdl"))
-    )
-    term_score = idf * (F.col("tf") * F.lit(k1 + 1.0)) / denom
-    per_term = (
-        scored.select("id", "tok", term_score.alias("s"))
-        .groupBy("id")
-        .agg(
-            *[
-                F.sum(F.when(F.col("tok") == t, F.col("s"))).alias(
-                    f"s_{i}"
-                )
-                for i, t in enumerate(qt)
-            ]
-        )
-    )
-    score = F.lit(0.0)
-    for i in range(len(qt)):
-        score = score + F.coalesce(F.col(f"s_{i}"), F.lit(0.0))
-    return (
-        per_term.select(F.col("id").alias("doc_id"), score.alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-
-
-def docs_bm25_regexp_count(spark, sf_dir):
-    """r17 challenger: tf pass WITHOUT the token explode — per query
-    term, one `regexp_count` over the normalized text with a cached
-    compiled pattern (whole-token boundaries via lookarounds), then
-    `stack` to (tok, tf) rows. Counts are integers computed over the
-    same token definition (maximal \\S+ runs of lower(trim(text))),
-    so every downstream float is bit-identical to the explode form.
-    dl replicates split()'s empty-string edge (split('') = [''] ->
-    size 1) explicitly."""
-    from etl_macropulse_br_spark.plans.queries import _BM25_TERMS, _t
-
-    qt = [t.lower() for t in _BM25_TERMS]
-    docs = _t(spark, sf_dir, "documents")
-    t = F.lower(F.trim(F.col("text")))
-    base = docs.select(F.col("doc_id").alias("id"), t.alias("t")).filter(
-        F.col("t").isNotNull()
-    )
-    dl = F.when(F.length("t") == 0, F.lit(1)).otherwise(
-        F.regexp_count(F.col("t"), F.lit(r"\S+"))
-    )
-    base = base.select("id", dl.alias("dl"), "t")
-    srow = base.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
-    ).collect()[0]
-    n_docs, avgdl = srow["n_docs"], srow["avgdl"]
-    tf_cols = [
-        F.regexp_count(
-            F.col("t"), F.lit(rf"(?<=^|\s)\Q{term}\E(?=$|\s)")
-        ).alias(f"tf_{i}")
-        for i, term in enumerate(qt)
-    ]
-    stack_expr = "stack({}, {}) as (tok, tf)".format(
-        len(qt),
-        ", ".join(f"'{term}', tf_{i}" for i, term in enumerate(qt)),
-    )
-    tf = (
-        base.select("id", "dl", *tf_cols)
-        .selectExpr("id", "dl", stack_expr)
-        .filter(F.col("tf") > 0)
-        .select("id", "tok", "tf", "dl")
-    )
-    return _bm25_from_tf(tf, n_docs, avgdl, qt)
-
-
-def docs_bm25_prefilter(spark, sf_dir):
-    """r17 challenger: keep split+explode+aggregate, but filter the
-    token ARRAY down to the query terms (higher-order `filter`)
-    BEFORE the explode, so only matching tokens ever become rows.
-    Counts identical: array filter preserves order and multiplicity,
-    and the old shape discarded the same non-matching rows one step
-    later; dl still measures the UNFILTERED array."""
-    from etl_macropulse_br_spark.plans.queries import _BM25_TERMS, _t
-
-    qt = [t.lower() for t in _BM25_TERMS]
-    docs = _t(spark, sf_dir, "documents")
-    t = F.lower(F.trim(F.col("text")))
-    base = docs.select(
-        F.col("doc_id").alias("id"), F.split(t, r"\s+").alias("__toks")
-    ).filter(F.col("__toks").isNotNull())
-    srow = (
-        base.select(F.size("__toks").alias("dl"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
-        )
-        .collect()[0]
-    )
-    n_docs, avgdl = srow["n_docs"], srow["avgdl"]
-    tf = (
-        base.select(
-            "id",
-            F.size("__toks").alias("dl"),
-            F.explode(
-                F.filter("__toks", lambda x: x.isin(*qt))
-            ).alias("tok"),
-        )
-        .groupBy("id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl"))
-    )
-    return _bm25_from_tf(tf, n_docs, avgdl, qt)
-
-
-def docs_bm25_extract_all(spark, sf_dir):
-    """r17 challenger: keep the explode+aggregate tf pass but
-    tokenize with `regexp_extract_all('\\S+')` (pattern compiled
-    once per operator instance) instead of `split('\\s+')` (Java
-    String.split compiles the pattern per ROW for multi-char
-    regexes). Token vectors identical on trimmed text; the
-    empty-string edge (split -> ['']) replicated explicitly."""
-    from etl_macropulse_br_spark.plans.queries import _BM25_TERMS, _t
-
-    qt = [t.lower() for t in _BM25_TERMS]
-    docs = _t(spark, sf_dir, "documents")
-    t = F.lower(F.trim(F.col("text")))
-    toks = F.when(F.length(t) == 0, F.array(F.lit(""))).otherwise(
-        F.regexp_extract_all(t, F.lit(r"\S+"), F.lit(0))
-    )
-    base = (
-        docs.select(F.col("doc_id").alias("id"), toks.alias("__toks"))
-        .filter(F.col("__toks").isNotNull())
-    )
-    srow = (
-        base.select(F.size("__toks").alias("dl"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
-        )
-        .collect()[0]
-    )
-    n_docs, avgdl = srow["n_docs"], srow["avgdl"]
-    tf = (
-        base.select(
-            "id",
-            F.size("__toks").alias("dl"),
-            F.explode("__toks").alias("tok"),
-        )
-        .filter(F.col("tok").isin(*qt))
-        .groupBy("id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl"))
-    )
-    return _bm25_from_tf(tf, n_docs, avgdl, qt)
-
-
-def _registry(name):
-    def run(spark, sf_dir):
-        from etl_macropulse_br_spark.plans.queries import QUERIES
-
-        return QUERIES[name](spark, sf_dir)
-
-    run.__name__ = name
-    return run
-
-
-VARIANTS = {
-    # baselines (registry plans)
-    "q3_shipping_priority": _registry("q3_shipping_priority"),
-    "q5_local_supplier_volume": _registry("q5_local_supplier_volume"),
-    "q7_volume_shipping": _registry("q7_volume_shipping"),
-    "ptbr_roundtrip": _registry("ptbr_roundtrip"),
-    "skew_salted_rollup": _registry("skew_salted_rollup"),
-    "docs_curated": _registry("docs_curated"),
-    "docs_near_dups": _registry("docs_near_dups"),
-    # challengers
-    "q3_all_shuffle": q3_all_shuffle,
-    "q5_all_shuffle": q5_all_shuffle,
-    "q7_all_shuffle": q7_all_shuffle,
-    "ptbr_all_shuffle": ptbr_all_shuffle,
-    "skew_all_shuffle": skew_all_shuffle,
-    "q3_inner_shuffle": q3_inner_shuffle,
-    "q5_inner_shuffle": q5_inner_shuffle,
-    "q7_inner_shuffle": q7_inner_shuffle,
-    "docs_near_dups_oldshape": docs_near_dups_oldshape,
-    "docs_near_dups_bandhint": docs_near_dups_bandhint,
-    "docs_near_dups_shhint": docs_near_dups_shhint,
-    "docs_curated_oldshape": docs_curated_oldshape,
-    # r14 floor-certification challengers (VERDICT r13 next #3)
-    "zscore_events": _registry("zscore_events"),
-    "zscore_events_aggjoin": zscore_events_aggjoin,
-    "props_struct_parse": _registry("props_struct_parse"),
-    "props_get_json_object": props_get_json_object,
-    "props_json_tuple": props_json_tuple,
-    "q10_returned_items": _registry("q10_returned_items"),
-    "q10_all_shuffle": q10_all_shuffle,
-    # r16 challengers (all rejected; PLANS.md r16 ledger)
-    "embedding_near_dups": _registry("embedding_near_dups"),
-    "emb_near_dups_precast": _emb_near_dups_variant(precast=True),
-    "emb_near_dups_hash_repart": _emb_near_dups_variant(pre="hash"),
-    "emb_near_dups_rr_repart": _emb_near_dups_variant(pre="rr"),
-    "dedup_first_event": _registry("dedup_first_event"),
-    "dedup_first_event_unprojected": dedup_first_event_unprojected,
-    # r17 challengers (VERDICT r16 next #5: the bm25 tf pass)
-    "docs_bm25_topk": _registry("docs_bm25_topk"),
-    "docs_bm25_regexp_count": docs_bm25_regexp_count,
-    "docs_bm25_extract_all": docs_bm25_extract_all,
-    "docs_bm25_prefilter": docs_bm25_prefilter,
-}
-
 
 def main() -> None:
-    args = sys.argv[1:]
-    if "--list" in args:
-        print("\n".join(VARIANTS))
+    from etl_macropulse_br_spark.plans.queries import QUERIES
+
+    names = sys.argv[1:]
+    if "--list" in names:
+        print("\n".join(QUERIES))
         return
-    names = list(VARIANTS) if "--all" in args else args
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-    )
+    if not names:
+        sys.exit("usage: ab_query.py NAME [NAME ...] | --list")
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        sys.exit(
+            f"unknown queries {unknown} — valid names: "
+            f"{', '.join(QUERIES)}"
+        )
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_runs = int(os.environ.get("AB_RUNS", "6"))
 
-    from etl_macropulse_br_spark.operators.util import (
-        persisted_count,
-        unpersist_candidates,
-    )
+    from bench import best_of, warm_up
     from etl_macropulse_br_spark.session import get_spark
 
     print(f"# loadavg at start: {os.getloadavg()}", file=sys.stderr)
     spark = get_spark(app_name="ab_query", profile="small-input")
-    # bench.py's full warmup, verbatim in spirit: without the shape
-    # loop, variants measured LATER in the list run against warmer
-    # C2-compiled operator classes — a systematic position bias that
-    # flipped an A/B verdict during r13 (see PLANS.md).
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def _noop(batches):
-        for pdf in batches:
-            yield pdf
-
-    spark.range(100).selectExpr("id").mapInPandas(_noop, "id long").count()
-    from pyspark.sql import Window as _W
-
-    from etl_macropulse_br_spark.sources.files import TESTDATA_TABLES
-
-    for t in TESTDATA_TABLES:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
-    _d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    _li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    _w = _W.partitionBy(F.col("doc_id") % 8).orderBy("doc_id")
-    _shapes = [
-        _d.select("doc_id", F.row_number().over(_w).alias("rn")),
-        _d.alias("a").join(_d.alias("b"), "doc_id"),
-        _d.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("tok")
-        )
-        .select("doc_id", F.md5("tok").alias("h"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1))),
-        _d.orderBy(F.col("doc_id").desc()).limit(5),
-        _li.groupBy("l_returnflag").agg(
-            F.sum("l_quantity"), F.avg("l_extendedprice")
-        ),
-    ]
-    for _ in range(3):
-        for _s in _shapes:
-            _s.write.mode("overwrite").format("noop").save()
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    # bench's full warm-up: without the shape loop, names measured
+    # LATER in the list run against warmer C2-compiled operator
+    # classes — a position bias that flipped an A/B verdict in r13
+    # (see PLANS.md)
+    warm_up(spark, sf_dir)
     for occ, name in enumerate(names):
-        fn = VARIANTS[name]
-        n_before = persisted_count()
-        df = fn(spark, sf_dir)
-        uses_cache = persisted_count() > n_before
-        df.write.mode("overwrite").format("noop").save()
-        df.write.mode("overwrite").format("noop").save()
-        group = f"ab:{occ}:{name}"  # unique per occurrence, so a
-        # name repeated for ABBA ordering doesn't accumulate jobs
-        sc.setJobGroup(group, name)
-        best = float("inf")
-        for _ in range(n_runs):
-            if uses_cache:
-                unpersist_candidates()
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-            else:
-                t0 = time.perf_counter()
-                df.write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        jobs = len(tracker.getJobIdsForGroup(group)) / n_runs
-        unpersist_candidates()
-        sc.setJobGroup("ab:idle", "idle")
+        best, jobs, _ = best_of(
+            spark, QUERIES[name], sf_dir, n_runs, f"ab:{occ}:{name}"
+        )
         print(f"{name}: {best:.3f}s  {jobs:.1f} jobs/run")
 
 

@@ -22,14 +22,22 @@ scale-out curve:
 - Runs a small set of shuffle-heavy DECLARED queries (the registry
   callables, unmodified) under the CLUSTER profile (AQE on — the
   posture whose adaptivity the scale claims rest on) at two core
-  counts, fresh JVM per count, warm min-of-N noop-sink timings.
+  counts, a fresh session per count (in one JVM: PySpark keeps its
+  gateway JVM across ``spark.stop()``), timed by bench.py's core
+  (``warm_up`` + ``best_of``: two warm runs, then min-of-N noop-sink
+  runs, so a row here is measured like a bench row).
 - Reports per-query t(low)/t(high) — the speedup the extra cores
   actually buy once the input is big enough that compute, not the
   job floor, dominates.
 
 Usage:
-    python tools/scale_probe.py [--k 16] [--cores 32,8] \
+    python tools/scale_probe.py [--k 16] [--cores 4,1] \
         [--runs 3] [--out plans/r17/scale_probe.json]
+
+``--cores`` defaults to the host's core count and 1. The JSON's
+``gate_timed_out`` is true when any session started before the
+load gate cleared (see ``wait_quiet``); such a curve is not
+citable.
 
 Interpretation: ratio >> 1 means the query's stages parallelize
 (the replicated input is big enough to occupy the extra cores);
@@ -50,6 +58,8 @@ import time
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
+
+from bench import best_of, warm_up  # noqa: E402
 
 # (query, tables it reads) — shuffle-heavy declared queries whose
 # inputs replicate cleanly by primary id. Dims the TPC-H queries
@@ -72,10 +82,12 @@ REPL_KEYS: dict[str, tuple[str, str | None]] = {
 }
 
 
-def build_replicated_dir(sf_dir: str, k: int, dest: str) -> None:
-    """Write K-replicated copies of the probe tables into ``dest``;
-    every other table file is copied verbatim so registry callables
-    that touch dims keep working."""
+def build_replicated_dir(
+    sf_dir: str, k: int, dest: str, n_files: int
+) -> None:
+    """Write K-replicated copies of the probe tables into ``dest``,
+    ``n_files`` files each; every other table file is copied verbatim
+    so registry callables that touch dims keep working."""
     from pyspark.sql import functions as F
 
     from etl_macropulse_br_spark.session import get_spark
@@ -115,9 +127,9 @@ def build_replicated_dir(sf_dir: str, k: int, dest: str) -> None:
             out = reduce(DataFrame.unionAll, parts)
         else:
             out = replicate(df, k, idc, tc)
-        # 64 files ≈ 2 x max cores: see module docstring (scan splits
+        # n_files = 2 x max cores: see module docstring (scan splits
         # must not be the parallelism cap the probe measures)
-        out.repartition(64).write.mode("overwrite").parquet(
+        out.repartition(n_files).write.mode("overwrite").parquet(
             f"{dest}/{t}.parquet"
         )
     for t in TESTDATA_TABLES:
@@ -133,10 +145,11 @@ def build_replicated_dir(sf_dir: str, k: int, dest: str) -> None:
 
 def wait_quiet(
     max_wait_s: int = 600, load_1m: float = 1.0, load_5m: float = 2.0
-) -> float:
+) -> tuple[float, bool]:
     """Block until the loadavg passes the bench's own citability gate
-    (1m < 1.0 AND 5m < 2.0, bounded wait) and return the 1m loadavg
-    seen last. The replication write that precedes measurement drives
+    (1m < 1.0 AND 5m < 2.0, bounded wait). Returns the 1m loadavg
+    seen last and whether the wait hit its deadline instead (said on
+    stderr too). The replication write that precedes measurement drives
     the box's load to 10+; without this cool-down the FIRST
     core-count session runs under residual load and the ratio is
     biased against whichever count runs first (three early probe runs
@@ -145,17 +158,21 @@ def wait_quiet(
     settled box)."""
     deadline = time.monotonic() + max_wait_s
     l1, l5, _ = os.getloadavg()
-    while (l1 >= load_1m or l5 >= load_5m) and time.monotonic() < deadline:
+    while l1 >= load_1m or l5 >= load_5m:
+        if time.monotonic() >= deadline:
+            print(
+                f"# LOAD GATE TIMED OUT after {max_wait_s}s: loadavg "
+                f"1m={l1:.2f} 5m={l5:.2f} (need 1m<{load_1m} and "
+                f"5m<{load_5m}) — the next session runs under load",
+                file=sys.stderr,
+            )
+            return round(l1, 2), True
         time.sleep(10)
         l1, l5, _ = os.getloadavg()
-    return round(l1, 2)
+    return round(l1, 2), False
 
 
 def run_at_cores(data_dir: str, cores: int, n_runs: int) -> dict:
-    from etl_macropulse_br_spark.operators.util import (
-        persisted_count,
-        unpersist_candidates,
-    )
     from etl_macropulse_br_spark.plans.queries import QUERIES
     from etl_macropulse_br_spark.session import get_spark
 
@@ -165,31 +182,12 @@ def run_at_cores(data_dir: str, cores: int, n_runs: int) -> dict:
         shuffle_partitions=max(cores, 8),
         profile="cluster",
     )
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for t in sorted({t for ts in PROBE_QUERIES.values() for t in ts}):
-        spark.read.parquet(f"{data_dir}/{t}.parquet").count()
+    warm_up(spark, data_dir)
 
     res: dict[str, float] = {}
     for name in PROBE_QUERIES:
-        fn = QUERIES[name]
-        n_before = persisted_count()
-        df = fn(spark, data_dir)
-        uses_cache = persisted_count() > n_before
-        spark.sparkContext.setJobDescription(f"scale_probe:{name}")
-        df.write.mode("overwrite").format("noop").save()  # warm
-        best = float("inf")
-        for _ in range(n_runs):
-            if uses_cache:
-                unpersist_candidates()
-                t0 = time.perf_counter()
-                fn(spark, data_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-            else:
-                t0 = time.perf_counter()
-                df.write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        unpersist_candidates()
+        group = f"scale_probe:c{cores}:{name}"
+        best, _, _ = best_of(spark, QUERIES[name], data_dir, n_runs, group)
         res[name] = round(best, 3)
         print(f"# c{cores} {name}: {best:.3f}s", file=sys.stderr)
     spark.stop()
@@ -199,7 +197,7 @@ def run_at_cores(data_dir: str, cores: int, n_runs: int) -> dict:
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--k", type=int, default=16)
-    ap.add_argument("--cores", default="32,8")
+    ap.add_argument("--cores", default=f"{os.cpu_count() or 1},1")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
@@ -212,7 +210,7 @@ def main() -> None:
     dest = tempfile.mkdtemp(prefix=f"scale_probe_k{args.k}_")
     try:
         print(f"# replicating K={args.k} into {dest}", file=sys.stderr)
-        build_replicated_dir(sf_dir, args.k, dest)
+        build_replicated_dir(sf_dir, args.k, dest, 2 * hi)
         # force the replication's dirty pages to disk BEFORE any timed
         # session: measured on this box, background writeback of the
         # multi-GB replicated dir overlapped the first core-count
@@ -241,8 +239,11 @@ def main() -> None:
         schedule = list(cores) + list(reversed(cores))
         out["schedule"] = schedule
         out["loadavg_at_session_start"] = []
+        out["gate_timed_out"] = False
         for c in schedule:
-            out["loadavg_at_session_start"].append(wait_quiet())
+            load, timed_out = wait_quiet()
+            out["loadavg_at_session_start"].append(load)
+            out["gate_timed_out"] |= timed_out
             got = run_at_cores(dest, c, args.runs)
             prev = out["per_cores"].setdefault(str(c), got)
             if prev is not got:
